@@ -36,6 +36,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -45,6 +46,7 @@ from pyspark.sql import functions as F, types as T
 from blacklab_spark import codec
 from blacklab_spark.arrow_kernels import finalize_blocks_arrow, spimi_miniblocks
 from blacklab_spark.config import BuildConfig
+from blacklab_spark.index import read_artifact
 from blacklab_spark.oracle import bm25_idf  # same formula, one source of truth
 from blacklab_spark.tokenizer import tokens_insensitive
 
@@ -81,33 +83,24 @@ BLOCK_SCHEMA = T.StructType([
 ])
 
 
-def _shuffle_snapshot(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle_write_bytes, shuffle_read_bytes) across all
-    completed Spark stages, from the live AppStatusStore. Per-stage
-    deltas land in the manifest so scaling efficiency can be tied to a
-    measured bytes-moved-per-turn number (r4 VERDICT #2c) instead of
-    guessed. Pure introspection via py4j — any reflection drift across
+def _tagged_shuffle_bytes(spark, tag: str) -> tuple[int, int] | None:
+    """(shuffle_write_bytes, shuffle_read_bytes) of the stages of the
+    jobs carrying job tag ``tag``, from the live AppStatusStore, each
+    stage counted once (a job reusing another's shuffle lists its
+    stage too). Jobs of other threads carry no such tag, so they never
+    leak in. Pure introspection via py4j — any reflection drift across
     Spark versions degrades to None, never fails the build."""
     try:
         sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        empty = sc._jvm.java.util.ArrayList()
-        quantiles = sc._gateway.new_array(sc._jvm.double, 0)
-        stages = store.stageList(empty, False, False, quantiles, empty)
-        it, w, r = stages.iterator(), 0, 0
-        while it.hasNext():
-            s = it.next()
-            w += s.shuffleWriteBytes()
-            r += s.shuffleReadBytes()
-        return int(w), int(r)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()   # the store lags the jobs
+        stages = {s for j in jsc.statusTracker().getJobIdsForTag(tag)
+                  for s in sc.statusTracker().getJobInfo(j).stageIds}
+        attempts = [jsc.statusStore().lastStageAttempt(s) for s in stages]
+        return (sum(a.shuffleWriteBytes() for a in attempts),
+                sum(a.shuffleReadBytes() for a in attempts))
     except Exception:
         return None
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side, no Spark job —
-    each read-back count() was ~0.5-1s of serial latency per stage)."""
-    return sum(rows for _, rows in _parquet_file_rows(path))
 
 
 def _parquet_file_rows(path: str) -> list[tuple[str, int]]:
@@ -294,9 +287,7 @@ class IndexBuilder:
         self.out = out_dir.rstrip("/")
         self.cfg = cfg or BuildConfig()
         self.manifest_path = os.path.join(self.out, "_index_meta.json")
-        # per-stage shuffle-byte deltas baseline (compact() calls
-        # _finish_stage without going through build())
-        self._shuffle_snap = _shuffle_snapshot(spark)
+        self._tag: str | None = None
 
     # -- manifest / checkpoint helpers ---------------------------------
     def _load_manifest(self) -> dict:
@@ -338,9 +329,33 @@ class IndexBuilder:
         if changed:
             self._save_manifest(m)
 
-    def _finish_stage(self, m: dict, name: str, t0: float, path: str,
-                      partitions: int) -> int:
-        dur = time.time() - t0
+    def _begin_stage(self, name: str) -> float:
+        """Start a stage; returns its start time. Until _write_stage,
+        this thread's jobs carry a fresh stage tag (thread-local like a
+        job group, which it leaves intact)."""
+        self._tag = f"blacklab-build-{name}-{uuid.uuid4().hex}"
+        self.spark.sparkContext.addJobTag(self._tag)
+        return time.time()
+
+    def _end_stage(self) -> None:
+        if self._tag is not None:
+            self.spark.sparkContext.removeJobTag(self._tag)
+            self._tag = None
+
+    def _write_stage(self, m: dict, name: str, t0: float, df: DataFrame,
+                     path: str, partitions: int) -> None:
+        """Write a begun stage's artifact and record the stage. 4MB row
+        groups: splittable scans regardless of file count (a single
+        128MB row group makes a file one indivisible task → stage
+        skew), and finer row-group pruning at query time."""
+        try:
+            df.write.mode("overwrite") \
+                .option("parquet.block.size", 4 * 1024 * 1024).parquet(path)
+            dur = time.time() - t0
+            # shuffle bytes moved by THIS stage's jobs (its job tag)
+            moved = _tagged_shuffle_bytes(self.spark, self._tag)
+        finally:
+            self._end_stage()
         files = _parquet_file_rows(path)
         rows = sum(r for _, r in files)
         m["stages"][name] = {
@@ -351,29 +366,21 @@ class IndexBuilder:
             # file = per write-task row count, from the parquet footers
             "files": [{"file": f, "rows": r} for f, r in files],
         }
-        # shuffle bytes moved by THIS stage (delta of the session-wide
-        # cumulative counters since the previous stage boundary).
-        # Caveats by construction: the store retains a bounded stage
-        # window (spark.ui.retainedStages), so in a very long session
-        # the cumulative counter can DROP between snapshots, and
-        # concurrent jobs in the same session land in this stage's
-        # delta — negative deltas are discarded rather than recorded
-        # (they would corrupt bytes-per-turn downstream).
-        snap = _shuffle_snapshot(self.spark)
-        if snap is not None and self._shuffle_snap is not None:
-            dw = snap[0] - self._shuffle_snap[0]
-            dr = snap[1] - self._shuffle_snap[1]
-            if dw >= 0 and dr >= 0:
-                m["stages"][name]["shuffle_write_bytes"] = dw
-                m["stages"][name]["shuffle_read_bytes"] = dr
-        if snap is not None:
-            self._shuffle_snap = snap
+        if moved is not None:
+            m["stages"][name]["shuffle_write_bytes"] = moved[0]
+            m["stages"][name]["shuffle_read_bytes"] = moved[1]
         self._save_manifest(m)
-        return rows
 
     # -- build ---------------------------------------------------------
     def build(self, transcripts: DataFrame, resume: bool = False) -> dict:
         """Run all stages; returns the final manifest."""
+        try:
+            return self._build(transcripts, resume)
+        finally:
+            # a failed stage must not leave its tag on the caller's thread
+            self._end_stage()
+
+    def _build(self, transcripts: DataFrame, resume: bool) -> dict:
         cfg = self.cfg
         if cfg.preprocess:
             # convert-and-tag hooks (preprocess.py): column-expression
@@ -394,7 +401,6 @@ class IndexBuilder:
             normalized_synonyms(cfg.synonyms)  # raises on identity
         parts = cfg.num_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._shuffle_snap = _shuffle_snapshot(self.spark)
         m = self._load_manifest() if resume else {
             "format_version": cfg.format_version, "config": cfg.to_dict(),
             "stages": {}}
@@ -402,7 +408,7 @@ class IndexBuilder:
         # Stage 1: doc_meta = ids + tokens + text (forward index+content store)
         doc_meta_path = os.path.join(self.out, "doc_meta")
         if not (resume and self._stage_done(m, "doc_meta")):
-            t0 = time.time()
+            t0 = self._begin_stage("doc_meta")
             with_ids, cached = assign_doc_ids(transcripts, parts)
             if cfg.tags:
                 # inline-tag corpora (operators/tags.py): tokenize the
@@ -483,17 +489,11 @@ class IndexBuilder:
             # runs; writing directly keeps parquet row-group pruning
             # and avoids a second shuffle (repartitionByRange would
             # also re-execute the pipeline for boundary sampling).
-            # 4MB row groups: splittable scans regardless of file
-            # count (a single 128MB row group makes a file one
-            # indivisible task → stage skew), and finer row-group
-            # pruning at query time.
-            doc_meta.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(doc_meta_path)
+            self._write_stage(m, "doc_meta", t0, doc_meta, doc_meta_path,
+                              parts)
             cached.unpersist()
-            self._finish_stage(m, "doc_meta", t0, doc_meta_path, parts)
 
-        doc_meta = self.spark.read.parquet(doc_meta_path)
+        doc_meta = read_artifact(self.spark, doc_meta_path)
 
         # Stage 1b (cfg.tags): inline-tag span layer — map-side stack
         # machine over text_raw (operators/tags.py), one narrow
@@ -504,13 +504,11 @@ class IndexBuilder:
             spans_path = os.path.join(self.out, "_spans")
             if not (resume and self._stage_done(m, "spans",
                                                 spans_path)):
-                t0 = time.time()
+                t0 = self._begin_stage("spans")
                 from blacklab_spark.operators.tags import doc_tag_spans
-                sp = doc_tag_spans(doc_meta, "text_raw")
-                sp.write.mode("overwrite") \
-                    .option("parquet.block.size", 4 * 1024 * 1024) \
-                    .parquet(spans_path)
-                self._finish_stage(m, "spans", t0, spans_path, parts)
+                self._write_stage(m, "spans", t0,
+                                  doc_tag_spans(doc_meta, "text_raw"),
+                                  spans_path, parts)
 
         # Stage 1c: REAL dependency edges — inputs carrying a
         # per-token HEAD/DEPREL layer (read_conllu; reference indexes
@@ -532,7 +530,7 @@ class IndexBuilder:
         else:
             if not (resume and self._stage_done(m, "relations",
                                                 rel_path)):
-                t0 = time.time()
+                t0 = self._begin_stage("relations")
                 from blacklab_spark.operators.relations import \
                     edges_from_head_layer
                 keyed = transcripts.select(
@@ -541,10 +539,9 @@ class IndexBuilder:
                 rel_src = doc_meta.select(
                     "doc_id", "conv_id", "turn_idx") \
                     .join(keyed, ["conv_id", "turn_idx"])
-                edges_from_head_layer(rel_src).write.mode("overwrite") \
-                    .option("parquet.block.size", 4 * 1024 * 1024) \
-                    .parquet(rel_path)
-                self._finish_stage(m, "relations", t0, rel_path, parts)
+                self._write_stage(m, "relations", t0,
+                                  edges_from_head_layer(rel_src),
+                                  rel_path, parts)
 
         # Stage 1d: REAL alignment edges — parallel-corpus inputs
         # carrying an `align_pairs` column (array<struct<src,tgt>> of
@@ -558,26 +555,24 @@ class IndexBuilder:
         else:
             if not (resume and self._stage_done(m, "alignments",
                                                 al_path)):
-                t0 = time.time()
+                t0 = self._begin_stage("alignments")
                 keyed = transcripts.select("conv_id", "turn_idx",
                                            "align_pairs")
                 al_src = doc_meta.select(
                     "doc_id", "conv_id", "turn_idx") \
                     .join(keyed, ["conv_id", "turn_idx"])
-                (al_src.select(
+                edges = (al_src.select(
                     "doc_id", F.explode("align_pairs").alias("e"))
-                 .select(
-                     "doc_id",
-                     F.col("e.src").cast("int").alias("al_src_start"),
-                     (F.col("e.src") + 1).cast("int")
-                     .alias("al_src_end"),
-                     F.col("e.tgt").cast("int").alias("al_tgt_start"),
-                     (F.col("e.tgt") + 1).cast("int")
-                     .alias("al_tgt_end"))
-                 .write.mode("overwrite")
-                 .option("parquet.block.size", 4 * 1024 * 1024)
-                 .parquet(al_path))
-                self._finish_stage(m, "alignments", t0, al_path, parts)
+                    .select(
+                        "doc_id",
+                        F.col("e.src").cast("int").alias("al_src_start"),
+                        (F.col("e.src") + 1).cast("int")
+                        .alias("al_src_end"),
+                        F.col("e.tgt").cast("int").alias("al_tgt_start"),
+                        (F.col("e.tgt") + 1).cast("int")
+                        .alias("al_tgt_end")))
+                self._write_stage(m, "alignments", t0, edges, al_path,
+                                  parts)
 
         agg = doc_meta.agg(F.count("*").alias("n"),
                            F.sum("n_tokens").alias("tot")).collect()[0]
@@ -592,13 +587,11 @@ class IndexBuilder:
         # build must not re-tokenize).
         runs_path = os.path.join(self.out, "runs")
         if not (resume and self._stage_done(m, "runs")):
-            t0 = time.time()
-            runs = _spimi_miniblocks(doc_meta, cfg)
-            runs.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(runs_path)
-            self._finish_stage(m, "runs", t0, runs_path, parts)
-        runs = self.spark.read.parquet(runs_path)
+            t0 = self._begin_stage("runs")
+            self._write_stage(m, "runs", t0,
+                              _spimi_miniblocks(doc_meta, cfg),
+                              runs_path, parts)
+        runs = read_artifact(self.spark, runs_path)
 
         # Stage 3: terms dictionary with dense ids (sorted by term).
         # The aggregate is persisted BEFORE any id scheme runs: the
@@ -608,7 +601,7 @@ class IndexBuilder:
         # parallel work; r4 VERDICT #2b).
         terms_path = os.path.join(self.out, "terms")
         if not (resume and self._stage_done(m, "terms")):
-            t0 = time.time()
+            t0 = self._begin_stage("terms")
             terms_agg = (runs.groupBy("term")
                          .agg(F.sum("n_docs").alias("df"),
                               F.sum("sum_tf").alias("cf"))).persist()
@@ -636,14 +629,13 @@ class IndexBuilder:
                     terms = terms.select("term", "term_id", "df", "cf")
                     # assign_dense_ids leaves terms range-partitioned
                     # and sorted by term (= term_id order)
-                terms.write.mode("overwrite").parquet(terms_path)
+                self._write_stage(m, "terms", t0, terms, terms_path,
+                                  1 if single else parts)
             finally:
                 terms_agg.unpersist()
                 if t_cached is not None:
                     t_cached.unpersist()
-            self._finish_stage(m, "terms", t0, terms_path,
-                               1 if single else parts)
-        terms = self.spark.read.parquet(terms_path)
+        terms = read_artifact(self.spark, terms_path)
 
         # Stage 4: shuffle merge of mini-blocks per (term_id, bucket):
         # assign term ids, renumber block ids, add per-block max BM25
@@ -651,7 +643,7 @@ class IndexBuilder:
         # max_score cannot be computed in SPIMI).
         postings_path = os.path.join(self.out, "postings")
         if not (resume and self._stage_done(m, "postings")):
-            t0 = time.time()
+            t0 = self._begin_stage("postings")
             joined = runs.join(terms.select("term", "term_id", "df"), "term")
             # hash-shuffle on (term_id, bucket) keeps each group whole
             # within a partition; sortWithinPartitions gives the kernel
@@ -670,10 +662,8 @@ class IndexBuilder:
             # a k-term lookup touches ≤k row groups per file. A
             # repartitionByRange here would re-run the whole encode
             # pipeline for boundary sampling — write directly.
-            blocks.write.mode("overwrite") \
-                .option("parquet.block.size", 4 * 1024 * 1024) \
-                .parquet(postings_path)
-            self._finish_stage(m, "postings", t0, postings_path, parts)
+            self._write_stage(m, "postings", t0, blocks, postings_path,
+                              parts)
 
         m["built_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         self._save_manifest(m)

@@ -91,10 +91,8 @@ def _carry_edge_artifact(spark: SparkSession, old: InvertedIndex,
     no row in the new doc_meta, so deleted docs' edges drop out of
     the joins either way. Records the stage in the new manifest so
     the manifest-gated accessor serves it."""
-    import time as _time
     from blacklab_spark.build import IndexBuilder
     new = open_index(spark, out_dir)
-    t0 = _time.time()
     old_map = old.doc_meta.select(F.col("doc_id").alias("_old_id"),
                                   "conv_id", "turn_idx")
     new_map = new.doc_meta.select("doc_id", "conv_id", "turn_idx")
@@ -104,9 +102,7 @@ def _carry_edge_artifact(spark: SparkSession, old: InvertedIndex,
                 .join(new_map, ["conv_id", "turn_idx"])
                 .select("doc_id", *cols))
     path = os.path.join(out_dir.rstrip("/"), dirname)
-    remapped.write.mode("overwrite") \
-        .option("parquet.block.size", 4 * 1024 * 1024).parquet(path)
     b = IndexBuilder(spark, out_dir, new.cfg)
-    m = b._load_manifest()
-    b._finish_stage(m, stage, t0, path,
-                    int(spark.conf.get("spark.sql.shuffle.partitions")))
+    b._write_stage(b._load_manifest(), stage, b._begin_stage(stage),
+                   remapped, path,
+                   int(spark.conf.get("spark.sql.shuffle.partitions")))

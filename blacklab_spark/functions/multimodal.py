@@ -102,6 +102,9 @@ def decode_ppm_bytes(buf: bytes) -> tuple[np.ndarray, str]:
     while len(toks) < 3:
         while i < n and buf[i:i + 1].isspace():
             i += 1
+        if i >= n:
+            raise ValueError("truncated PPM/PGM: header ends before "
+                             "width, height and maxval")
         if buf[i:i + 1] == b"#":
             while i < n and buf[i] != 0x0A:
                 i += 1
@@ -116,6 +119,9 @@ def decode_ppm_bytes(buf: bytes) -> tuple[np.ndarray, str]:
     if maxval > 255:
         raise NotImplementedError("16-bit PPM not supported")
     ch = 3 if buf[:2] == b"P6" else 1
+    if n - i < w * h * ch:
+        raise ValueError(f"truncated PPM/PGM: raster has {max(0, n - i)} "
+                         f"of {w * h * ch} bytes")
     arr = np.frombuffer(buf, dtype=np.uint8,
                         count=w * h * ch, offset=i)
     if ch == 3:

@@ -10,10 +10,27 @@ import json
 import os
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, \
+    types as T
 
 from blacklab_spark.config import BuildConfig
 from blacklab_spark.oracle import bm25_idf
+
+
+def read_artifact(spark: SparkSession, path: str) -> DataFrame:
+    """Read a Spark-written parquet directory without a Spark job:
+    ``spark.read.parquet(dir)`` infers the schema with one job, but
+    Spark's writer stores it in every footer, and pyarrow reads the
+    first data file's driver-side. Directories without such a footer
+    (no data file, foreign writer) fall back to inference."""
+    meta = ds.dataset(path, format="parquet").schema.metadata \
+        if os.path.isdir(path) else None
+    js = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    reader = spark.read.schema(T.StructType.fromJson(json.loads(js))) \
+        if js else spark.read
+    return reader.parquet(path)
 
 
 class InvertedIndex:
@@ -43,16 +60,14 @@ class InvertedIndex:
         self.avgdl: float = s["avgdl"]
         # driver-side memo for dictionary lookups: the terms table is
         # immutable per index, and one query resolves the same terms
-        # several times (cost choice, execution, explain) — each was a
-        # separate Spark job before.
+        # several times (cost choice, execution, explain).
         self._term_cache: dict = {}
-        # memoized artifact DataFrame HANDLES: spark.read.parquet +
-        # with_token_layers cost ~0.3-0.5s of driver/analysis time per
-        # access (measured r3), and a serving engine touches doc_meta
-        # on every query. Artifacts are immutable per index path; the
-        # only mutable state is the tombstone directory, so doc_meta's
-        # entry is keyed on its file listing and refreshes when a
-        # delete lands.
+        # memoized artifact DataFrame HANDLES: with_token_layers
+        # costs driver/analysis time per access, and a serving engine
+        # touches doc_meta on every query. Artifacts are immutable per
+        # index path; the only mutable state is the tombstone
+        # directory, so tombstone-dependent entries are keyed on its
+        # file listing and refresh when a delete lands.
         self._df_cache: dict = {}
         self._syn_values: frozenset | None = None
 
@@ -77,12 +92,17 @@ class InvertedIndex:
         return self._syn_values
 
     # Lazy DataFrames over the artifacts -------------------------------
+    def _memo(self, key, make) -> DataFrame:
+        if key not in self._df_cache:
+            self._df_cache[key] = make()
+        return self._df_cache[key]
+
+    def _read(self, dirname: str) -> DataFrame:
+        return read_artifact(self.spark, os.path.join(self.path, dirname))
+
     @property
     def terms(self) -> DataFrame:
-        if "terms" not in self._df_cache:
-            self._df_cache["terms"] = self.spark.read.parquet(
-                os.path.join(self.path, "terms"))
-        return self._df_cache["terms"]
+        return self._memo("terms", lambda: self._read("terms"))
 
     @property
     def doc_meta(self) -> DataFrame:
@@ -98,13 +118,10 @@ class InvertedIndex:
         array-free. Pre-v6 indexes have the arrays materialized and
         read them as plain columns."""
         from blacklab_spark.annotations import with_token_layers
-        key = ("doc_meta", self._tombstone_listing())
-        if key not in self._df_cache:
-            dm = self.spark.read.parquet(
-                os.path.join(self.path, "doc_meta"))
-            dm = with_token_layers(dm, self.cfg.annotations)
-            self._df_cache[key] = self.without_deleted(dm)
-        return self._df_cache[key]
+        return self._memo(
+            ("doc_meta", self._tombstone_listing()),
+            lambda: self.without_deleted(with_token_layers(
+                self._read("doc_meta"), self.cfg.annotations)))
 
     @property
     def doc_spans(self) -> DataFrame:
@@ -115,11 +132,8 @@ class InvertedIndex:
             raise ValueError(
                 "index was built without the inline-tag span layer; "
                 "rebuild with BuildConfig(tags=True)")
-        key = ("doc_spans", self._tombstone_listing())
-        if key not in self._df_cache:
-            sp = self.spark.read.parquet(os.path.join(self.path, "_spans"))
-            self._df_cache[key] = self.without_deleted(sp)
-        return self._df_cache[key]
+        return self._memo(("_spans", self._tombstone_listing()),
+                          lambda: self.without_deleted(self._read("_spans")))
 
     def _stored_artifact(self, stage: str, dirname: str
                          ) -> DataFrame | None:
@@ -132,15 +146,11 @@ class InvertedIndex:
         whose dir was deleted degrades to the derived fallback
         instead of raising at query time. Tombstone-filtered like
         doc_meta."""
-        p = os.path.join(self.path, dirname)
         if stage not in self.meta.get("stages", {}) \
-                or not os.path.isdir(p):
+                or not os.path.isdir(os.path.join(self.path, dirname)):
             return None
-        key = (dirname, self._tombstone_listing())
-        if key not in self._df_cache:
-            self._df_cache[key] = self.without_deleted(
-                self.spark.read.parquet(p))
-        return self._df_cache[key]
+        return self._memo((dirname, self._tombstone_listing()),
+                          lambda: self.without_deleted(self._read(dirname)))
 
     @property
     def doc_relations_stored(self) -> DataFrame | None:
@@ -168,10 +178,7 @@ class InvertedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        if "postings" not in self._df_cache:
-            self._df_cache["postings"] = self.spark.read.parquet(
-                os.path.join(self.path, "postings"))
-        return self._df_cache["postings"]
+        return self._memo("postings", lambda: self._read("postings"))
 
     # -- deletes (tombstones) ------------------------------------------
     @property
@@ -180,25 +187,14 @@ class InvertedIndex:
 
     def _tombstone_listing(self) -> tuple:
         """Sorted tombstone parquet file names — the mutable part of
-        an otherwise-immutable index, used as the doc_meta cache key."""
+        an otherwise-immutable index, used as the cache key of every
+        tombstone-filtered handle. Local listing only: __init__
+        rejects remote indexes."""
         p = self.deletes_path
-        if "://" not in p or p.startswith("file:"):
-            lp = p.split("://", 1)[-1]
-            if not os.path.isdir(lp):
-                return ()
-            return tuple(sorted(f for f in os.listdir(lp)
-                                if f.endswith(".parquet")))
-        # remote index (hdfs://, s3a://, ...): os.path would silently
-        # report "no tombstones" and resurrect deleted docs — go
-        # through the Hadoop FileSystem API instead.
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
+        if not os.path.isdir(p):
             return ()
-        return tuple(sorted(st.getPath().getName()
-                            for st in fs.listStatus(hpath)
-                            if st.getPath().getName().endswith(".parquet")))
+        return tuple(sorted(f for f in os.listdir(p)
+                            if f.endswith(".parquet")))
 
     @property
     def has_deletes(self) -> bool:
@@ -206,10 +202,12 @@ class InvertedIndex:
 
     @property
     def deleted_doc_ids(self) -> DataFrame | None:
-        if not self.has_deletes:
+        listing = self._tombstone_listing()
+        if not listing:
             return None
-        return (self.spark.read.parquet(self.deletes_path)
-                .select("doc_id").distinct())
+        return self._memo(
+            ("_deletes", listing),
+            lambda: self._read("_deletes").select("doc_id").distinct())
 
     def without_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join a (doc_id, ...) frame against the tombstones —
@@ -228,12 +226,24 @@ class InvertedIndex:
     # reference: search/lucene/BLSpanMultiTermQueryWrapper.java:53) ----
     def lookup_terms(self, terms: list[str]) -> pd.DataFrame:
         """Exact term lookup → pandas (term, term_id, df, cf, idf).
-        Memoized per index (callers must not mutate the result)."""
+        Memoized per index (callers must not mutate the result).
+
+        Read driver-side with pyarrow, no Spark job: the terms files
+        are sorted by term, so row-group min/max statistics skip every
+        row group that cannot hold a wanted term (the reference keeps
+        its dictionary in memory, TermsIntegrated.java:82-111). The
+        filter is an OR of equalities because pyarrow prunes row
+        groups on ``==`` but not on ``is_in``."""
         uniq = tuple(sorted(set(terms)))
         key = ("terms", uniq)
         if key not in self._term_cache:
-            pdf = (self.terms.filter(F.col("term").isin(list(uniq)))
-                   .select("term", "term_id", "df", "cf").toPandas())
+            want = pc.scalar(False)
+            for t in uniq:
+                want = want | (pc.field("term") == t)
+            pdf = ds.dataset(os.path.join(self.path, "terms"),
+                             format="parquet").to_table(
+                columns=["term", "term_id", "df", "cf"],
+                filter=want).to_pandas()
             pdf["idf"] = [bm25_idf(self.n_docs, int(d)) for d in pdf["df"]]
             self._term_cache[key] = \
                 pdf.sort_values("term_id").reset_index(drop=True)

@@ -24,6 +24,10 @@ def get_spark(app: str = "blacklab_spark", cores: int | None = None,
         os.environ.setdefault(var, "1")
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
+    # driver heap: half the host's RAM, at most 64 GB — a heap above
+    # physical memory lets the JVM grow until the kernel OOM-kills it
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    heap = f"{min(64, max(1, ram_gb // 2))}g"
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -34,7 +38,7 @@ def get_spark(app: str = "blacklab_spark", cores: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", heap))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Floor on scan split count: small/mid-size corpora compress to

@@ -44,12 +44,6 @@ def _delta_dirs(root: str) -> list[str]:
                   and os.path.exists(os.path.join(ddir, d, "_index_meta.json")))
 
 
-def _max_doc_id(spark: SparkSession, index_dir: str) -> int:
-    dm = spark.read.parquet(os.path.join(index_dir, "doc_meta"))
-    row = dm.agg(F.max("doc_id").alias("m")).collect()[0]
-    return int(row["m"]) if row["m"] is not None else -1
-
-
 def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
                  cfg: BuildConfig | None = None,
                  delta_name: str | None = None) -> str:
@@ -57,15 +51,15 @@ def append_delta(spark: SparkSession, main_dir: str, batch: DataFrame,
     after the current maximum across main + existing deltas, so the
     global id space stays dense-ish and unique. Idempotent per
     ``delta_name`` (existing complete delta is left untouched)."""
-    parts = [main_dir] + _delta_dirs(main_dir)
-    # global id space: each part's ids are local-dense; its recorded
-    # offset shifts them. The next delta starts after the global max.
-    base = -1
-    for p in parts:
+    # global id space: each part's ids are dense 0..n_docs-1 by
+    # construction and its recorded offset shifts them, so the next
+    # delta starts after the largest offset + n_docs in the manifests.
+    base = 0
+    for p in [main_dir] + _delta_dirs(main_dir):
         with open(os.path.join(p, "_index_meta.json")) as f:
-            off = json.load(f).get("doc_id_offset", 0)
-        base = max(base, off + _max_doc_id(spark, p))
-    base += 1
+            meta = json.load(f)
+        base = max(base, meta.get("doc_id_offset", 0)
+                   + meta["stats"]["n_docs"])
     name = delta_name or f"delta{len(_delta_dirs(main_dir)):05d}"
     out = os.path.join(main_dir, "_deltas", name)
     if os.path.exists(os.path.join(out, "_index_meta.json")):
@@ -120,10 +114,7 @@ class DeltaSearchEngine:
         self.spark = spark
         self.parts = [open_index(spark, p)
                       for p in [main_dir] + _delta_dirs(main_dir)]
-        self.offsets = []
-        for p in self.parts:
-            with open(os.path.join(p.path, "_index_meta.json")) as f:
-                self.offsets.append(json.load(f).get("doc_id_offset", 0))
+        self.offsets = [p.meta.get("doc_id_offset", 0) for p in self.parts]
         self.n_docs = sum(p.n_docs for p in self.parts)
         total_tokens = sum(p.meta["stats"]["total_tokens"] for p in self.parts)
         self.avgdl = total_tokens / max(1, self.n_docs)

@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
+import os
+
 import pytest
 
 from blacklab_spark.build import build_index
@@ -64,3 +68,44 @@ def tiny_engine(spark, tiny_index_dir):
 @pytest.fixture(scope="session")
 def small_engine(spark, small_index_dir):
     return SearchEngine.open(spark, small_index_dir)
+
+
+_groups = itertools.count()
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` — on exit, ``ids`` holds the ids
+    of the Spark jobs the block submitted, counted through a job group
+    of its own."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"test-jobs-{next(_groups)}"
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "count jobs")
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            # the status store is fed asynchronously by the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+    return count
+
+
+@pytest.fixture(scope="session")
+def assert_artifact_schemas(spark):
+    """Checker: for each named artifact dir of an index, the schema
+    read_artifact takes from the parquet footer equals the one Spark
+    infers."""
+    from blacklab_spark.index import read_artifact
+
+    def check(index_dir: str, *kinds: str) -> None:
+        for kind in kinds:
+            p = os.path.join(index_dir, kind)
+            assert read_artifact(spark, p).schema == \
+                spark.read.parquet(p).schema, kind
+    return check

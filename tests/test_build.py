@@ -177,6 +177,46 @@ def test_manifest_lineage(spark, tiny_index_dir):
     assert m["stats"]["n_docs"] == 112  # 41+30+41 turns (FIXTURES.md tiny)
 
 
+def test_stage_shuffle_bytes_isolated_from_concurrent_jobs(
+        spark, tiny_pdf, tmp_path, spark_jobs):
+    """Per-stage shuffle bytes in the manifest are attributed by job
+    tag: shuffle jobs another thread runs during the build do not leak
+    in, and a job group the caller set still lists every build job."""
+    import threading
+    df = spark.createDataFrame(tiny_pdf)
+    cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
+    with spark_jobs() as quiet_jobs:
+        quiet = build_index(spark, df, str(tmp_path / "quiet"), cfg)
+    stop, noise_runs = threading.Event(), []
+
+    def noise():
+        spark.sparkContext.setJobGroup("test-noise", "concurrent shuffles")
+        while not stop.is_set():
+            spark.range(20000).groupBy((F.col("id") % 97).alias("k")) \
+                .count().collect()
+            noise_runs.append(1)
+
+    t = threading.Thread(target=noise)
+    t.start()
+    try:
+        with spark_jobs() as noisy_jobs:
+            noisy = build_index(spark, df, str(tmp_path / "noisy"), cfg)
+    finally:
+        stop.set()
+        t.join()
+    assert noise_runs
+    keys = ("shuffle_write_bytes", "shuffle_read_bytes")
+    got = {s: [st[k] for k in keys] for s, st in noisy["stages"].items()}
+    want = {s: [st[k] for k in keys] for s, st in quiet["stages"].items()}
+    assert got == want
+    assert want["doc_meta"][0] > 0 and want["postings"][0] > 0
+    assert len(noisy_jobs) == len(quiet_jobs) > 0
+    # no build job escaped the caller's group
+    ungrouped = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    assert not set(ungrouped) & set(range(min(noisy_jobs),
+                                          max(noisy_jobs) + 1))
+
+
 def test_synonym_injection_word_multivalue(spark, tiny_pdf, tmp_path):
     """BuildConfig.synonyms — word-layer posIncr-0 stacking
     (AnnotationWriter.java:233-311): injected values are searchable
@@ -228,7 +268,8 @@ def test_synonym_config_validation(spark, tiny_pdf, tmp_path):
                     BuildConfig(synonyms={"a": ["a"]}))
 
 
-def test_resume_skips_artifact_stages(spark, tiny_pdf, tmp_path):
+def test_resume_skips_artifact_stages(spark, tiny_pdf, tmp_path,
+                                      assert_artifact_schemas):
     """Underscore-dir artifact stages (relations/alignments/spans)
     must SKIP on resume like every other stage — they used to re-run
     every time because _stage_done probed out/<stage>/ instead of
@@ -247,6 +288,7 @@ def test_resume_skips_artifact_stages(spark, tiny_pdf, tmp_path):
     cfg = BuildConfig(block_size=8, bucket_size=16, num_partitions=2)
     m1 = build_index(spark, df, out, cfg)
     assert m1["stages"]["alignments"]["status"] == "done"
+    assert_artifact_schemas(out, "doc_meta", "_alignments")
     m2 = build_index(spark, df, out, cfg, resume=True)
     # identical stage records → the stage was skipped, not re-run
     assert m2["stages"]["alignments"] == m1["stages"]["alignments"]

@@ -124,7 +124,8 @@ def test_delete_visible_through_delta_engine(spark, tmp_path):
         F.col("conv_id") == "conv00002").count() > 0
 
 
-def test_compact_carries_stored_relations(spark, tmp_path):
+def test_compact_carries_stored_relations(spark, tmp_path,
+                                          assert_artifact_schemas):
     """compact() must carry the stored _relations artifact across the
     rebuild with doc ids remapped — it used to silently drop real
     dependency edges (they are not derivable from doc_meta)."""
@@ -147,7 +148,9 @@ def test_compact_carries_stored_relations(spark, tmp_path):
     # delete one conversation, then compact
     victim = idx.doc_meta.select("conv_id").first()["conv_id"]
     delete_docs(idx, f"conv_id = '{victim}'")
+    assert_artifact_schemas(out, "doc_meta", "_relations", "_deletes")
     new = compact(spark, out, str(tmp_path / "idx2"))
+    assert_artifact_schemas(new.path, "_relations")
     stored = new.doc_relations_stored
     assert stored is not None
     # expected: surviving edges with ids remapped via (conv, turn)

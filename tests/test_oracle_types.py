@@ -70,3 +70,14 @@ def test_oracle_output_types(duck, name):
                 f"fractional allowlist {sorted(FLOAT_OK)} — integer "
                 f"quantities must be integer-typed on the oracle side "
                 f"(the r3 rel_freq lesson: scale to _e9 BIGINT instead)")
+
+
+def test_strict_types_checks_every_object_value():
+    """--strict-types classifies an object column by ALL its non-null
+    values: one stray value after the first 50 keeps it 'O'."""
+    import pandas as pd
+    from tools.gate_compare import _dtype_kind
+    assert _dtype_kind(pd.Series([7] * 51, dtype=object)) == "i"
+    assert _dtype_kind(pd.Series([True] * 51, dtype=object)) == "b"
+    assert _dtype_kind(pd.Series([7] * 50 + ["7"], dtype=object)) == "O"
+    assert _dtype_kind(pd.Series([True] * 50 + [1], dtype=object)) == "O"

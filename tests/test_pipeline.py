@@ -164,6 +164,16 @@ def test_multimodal_numpy_decoders_roundtrip(seed):
     assert r == rate and np.array_equal(s, samples.astype(np.int32))
 
 
+@pytest.mark.parametrize("buf", [
+    b"P6\n4 4\n",                           # no maxval
+    b"P5\n4 4 # comment running to EOF",     # comment runs to EOF
+    b"P6\n2 2\n255\n" + bytes(11),          # raster 11 of 12 bytes
+], ids=["no-maxval", "comment-to-eof", "short-raster"])
+def test_multimodal_ppm_truncated_raises_clear_error(buf):
+    with pytest.raises(ValueError, match="truncated PPM/PGM"):
+        M.decode_ppm_bytes(buf)
+
+
 def test_multimodal_resize_nearest():
     rng = np.random.default_rng(17)
     arr = rng.integers(0, 256, (8, 6, 3), dtype=np.uint8)

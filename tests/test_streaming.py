@@ -75,6 +75,27 @@ def test_append_delta_idempotent(spark, split_fixture):
     assert len(os.listdir(os.path.join(root, "main", "_deltas"))) == 1
 
 
+def test_delta_open_and_plan_submit_no_jobs(spark, split_fixture,
+                                            spark_jobs):
+    """Delta doc ids continue after main's manifest n_docs, and
+    planning a top-k over main (with tombstones) + one delta submits
+    no Spark job."""
+    from blacklab_spark.delete import delete_docs
+    from blacklab_spark.index import open_index
+    root, cfg, parts = split_fixture
+    main = f"{root}/main"
+    d1 = append_delta(spark, main,
+                      spark.createDataFrame(parts["conv00001"]), cfg, "d1")
+    assert open_index(spark, d1).meta["doc_id_offset"] == \
+        len(parts["conv00000"])
+    assert delete_docs(open_index(spark, main), "turn_idx = 0") == 1
+    with spark_jobs() as ids:
+        dse = DeltaSearchEngine(spark, main)
+        plan = dse.topk(["visa", "application"], k=5)
+    assert ids == []
+    assert plan.collect()
+
+
 def test_stream_ingest_available_now(spark, split_fixture):
     root, cfg, parts = split_fixture
     src = f"{root}/incoming"

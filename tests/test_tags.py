@@ -155,7 +155,8 @@ def test_within_tag_pushes_anchor_docs_into_spans_scan(tagged_engine_idx):
     assert "In(doc_id" in plan or "EqualTo(doc_id" in plan
 
 
-def test_compact_preserves_spans(spark, tagged_engine_idx, tmp_path_factory):
+def test_compact_preserves_spans(spark, tagged_engine_idx, tmp_path_factory,
+                                assert_artifact_schemas):
     """Delete + compact on a tagged index re-derives the span layer
     from text_raw (delete.compact tags path)."""
     from blacklab_spark.delete import compact, delete_docs
@@ -167,6 +168,8 @@ def test_compact_preserves_spans(spark, tagged_engine_idx, tmp_path_factory):
     before = eng.index.doc_spans.count()
     deleted = delete_docs(eng.index, "conv_id = 'conv00000'")
     assert deleted > 0
+    assert_artifact_schemas(work, "doc_meta", "runs", "terms", "postings",
+                            "_spans", "_deletes")
     out = str(tmp_path_factory.mktemp("idx") / "tagged_compact")
     idx2 = compact(spark, work, out)
     after = idx2.doc_spans.count()

@@ -90,16 +90,15 @@ def _dtype_kind(series) -> str:
         return "M"
     if kind == "O":
         # object columns may wrap uniform Python scalars (DuckDB
-        # fetchdf corner cases); sniff non-null values — bools BEFORE
-        # ints (bool is an int subclass) so an object-bool column
-        # compares equal to a native bool one
-        vals = series.dropna()
-        head = list(vals.head(50))
-        if head and all(isinstance(v, (bool, np.bool_)) for v in head):
+        # fetchdf corner cases); check every non-null value — bools
+        # BEFORE ints (bool is an int subclass) so an object-bool
+        # column compares equal to a native bool one
+        vals = list(series.dropna())
+        if vals and all(isinstance(v, (bool, np.bool_)) for v in vals):
             return "b"
-        if head and all(isinstance(v, (int, np.integer))
+        if vals and all(isinstance(v, (int, np.integer))
                         and not isinstance(v, (bool, np.bool_))
-                        for v in head):
+                        for v in vals):
             return "i"
         return "O"
     return kind
